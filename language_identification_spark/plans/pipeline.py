@@ -6,12 +6,22 @@ lifecycle mapping in SURVEY.md §3.4):
 
 1. pure expressions: lang canon/collapse, heuristic features, cheap verdict
    (whole-stage codegen; Catalyst pushes column pruning into the scan)
-2. ONE Arrow pandas UDF for langid + perplexity, masked so rows already
-   dropped by cheap rules skip model work entirely (early-filter craft rule,
-   SURVEY.md §4.1) — content crosses the JVM↔Python boundary once
+2. ONE Arrow pandas UDF (``_filter_batch``) for langid + perplexity + the
+   regex scrub, masked so rows already dropped by cheap rules ship as ``""``
+   and skip all Python work (early-filter craft rule, SURVEY.md §4.1) —
+   content crosses the JVM↔Python boundary once, and scrubbed text comes
+   back only for rows the scrub changed.  The models read the first
+   SAMPLE_BYTES code points; the scrub's own Python prefilter (the
+   exact union of the patterns, ``re.ASCII``) gates its per-pattern passes
+   in the same regex engine that does the redaction
 3. pure-expression verdict assembly (single F.when tree, config.py order)
-4. ONE Arrow pandas UDF for the regex scrub, masked to kept rows only
-5. final projection incl. sha256 invariants (built-in ``F.sha2`` — no UDF)
+4. final projection: kept rows take the scrubbed text (or the untouched
+   content when the scrub changed nothing), incl. sha256 invariants
+   (built-in ``F.sha2`` — no UDF)
+
+Rows that pass the cheap rules but are then dropped by langid or perplexity
+are scrubbed too and the result is discarded: the verdict is not known until
+the models have run, and a second Python crossing costs more than that waste.
 
 Scale notes (100 TB / 1000 executors): no shuffle anywhere in this plan —
 it is embarrassingly parallel per input split; partition sizing and skew
@@ -38,6 +48,7 @@ from pyspark.sql.types import (
 from ..config import DEFAULT_CONFIG, FilterConfig
 from ..functions.heuristics import cheap_drop_reason, with_heuristics
 from ..functions.lang import canon_lang_col, primary_lang_col
+from ..hashing import SAMPLE_BYTES
 
 # explicit StructTypes (not DDL strings) so the UDFs can be defined at import
 # time without an active SparkContext
@@ -51,6 +62,10 @@ _ANALYZE_SCHEMA = StructType(
 )
 _SCRUB_SCHEMA = StructType(
     [StructField("text", StringType()), StructField("n_sub", LongType())]
+)
+_FILTER_SCHEMA = StructType(
+    _ANALYZE_SCHEMA.fields
+    + [StructField("scrubbed", StringType()), StructField("n_sub", LongType())]
 )
 
 
@@ -105,14 +120,34 @@ def _analyze_batch(content: pd.Series, active: pd.Series) -> pd.DataFrame:
 def _scrub_batch(content: pd.Series, keep: pd.Series) -> pd.DataFrame:
     from ..scrub.scrubber import scrub_series
 
-    # pretriggered: the JVM rlike trigger (exact union of the patterns)
-    # already gated every masked row — skip the redundant Python prefilter
-    scrubbed, n_sub = scrub_series(content, keep, pretriggered=True)
+    scrubbed, n_sub = scrub_series(content, keep)
     return pd.DataFrame({"text": scrubbed, "n_sub": n_sub}, index=content.index)
+
+
+def _filter_batch(
+    content: pd.Series, active: pd.Series, scrub: pd.Series
+) -> pd.DataFrame:
+    """Models + scrub for one Arrow batch: the whole Python side of
+    ``quality_filter`` in a single crossing.
+
+    ``content`` is the full text of rows the cheap rules kept (``""`` for
+    the rest); the models see its first SAMPLE_BYTES code points (every
+    code point is at least one UTF-8 byte, so that covers the SAMPLE_BYTES
+    bytes ``hashing.py`` reads).  ``scrubbed`` is NULL where the scrub
+    made no substitution, so unchanged text is not shipped back.
+    """
+    from ..scrub.scrubber import scrub_series
+
+    out = _analyze_batch(content.str.slice(0, SAMPLE_BYTES), active)
+    scrubbed, n_sub = scrub_series(content, active & scrub)
+    out["scrubbed"] = scrubbed.where(n_sub > 0, None)
+    out["n_sub"] = n_sub
+    return out
 
 
 analyze_udf = pandas_udf(_analyze_batch, _ANALYZE_SCHEMA)
 scrub_udf = pandas_udf(_scrub_batch, _SCRUB_SCHEMA)
+filter_udf = pandas_udf(_filter_batch, _FILTER_SCHEMA)
 
 
 def quality_filter(
@@ -139,15 +174,19 @@ def quality_filter(
     )
     df = with_heuristics(df)
     df = df.withColumn("cheap_reason", cheap_drop_reason(cfg))
-    # JVM-side trims before the Python boundary: (a) only the first
-    # SAMPLE_BYTES-worth of chars ever crosses Arrow (models never read
-    # further — hashing.py clips at the same byte count), (b) cheap-dropped
-    # rows ship as "" so a 5 MB minified blob costs nothing downstream
-    analyze_input = F.when(
-        F.col("cheap_reason").isNull(), F.substring(F.col("content"), 1, 4096)
-    ).otherwise(F.lit(""))
+    # cheap-dropped rows ship as "" so a 5 MB minified blob never crosses
+    # the JVM→Python boundary; the rest cross once, whole, for both the
+    # models (which clip Python-side) and the scrub — or clipped JVM-side
+    # when there is no scrub to read past the models' sample
+    text = (
+        F.col("content")
+        if scrub_enabled
+        else F.substring(F.col("content"), 1, SAMPLE_BYTES)
+    )
+    udf_input = F.when(F.col("cheap_reason").isNull(), text).otherwise(F.lit(""))
     df = df.withColumn(
-        "nlp", analyze_udf(analyze_input, F.col("cheap_reason").isNull())
+        "nlp",
+        filter_udf(udf_input, F.col("cheap_reason").isNull(), F.lit(scrub_enabled)),
     )
     reason = F.coalesce(
         F.col("cheap_reason"),
@@ -166,28 +205,8 @@ def quality_filter(
     df = df.withColumn("drop_reason", reason).withColumn(
         "keep", F.col("drop_reason").isNull()
     )
-    # scrub trigger runs as compiled Java regex inside codegen; the Python
-    # scrub UDF then touches only rows that contain a candidate match —
-    # regex in Python is the slow path, so it's gated twice (kept AND
-    # triggered).  Untriggered kept rows pass through unchanged by
-    # definition of the trigger (it is the exact union of the patterns).
-    from ..scrub.patterns import TRIGGER_REGEX
-
-    needs_scrub = (
-        F.col("keep") & F.col("content").rlike(TRIGGER_REGEX)
-        if scrub_enabled
-        else F.lit(False)
-    )
-    scrub_input = F.when(needs_scrub, F.col("content")).otherwise(F.lit(""))
-    df = df.withColumn("sc_raw", scrub_udf(scrub_input, needs_scrub))
-    df = df.withColumn(
-        "sc",
-        F.when(needs_scrub, F.col("sc_raw")).otherwise(
-            F.struct(
-                F.col("content").alias("text"), F.lit(0).cast("long").alias("n_sub")
-            )
-        ),
-    )
+    emit = F.lit(scrub_enabled) & F.col("keep")
+    scrubbed = F.when(emit, F.coalesce(F.col("nlp.scrubbed"), F.col("content")))
     return df.select(
         "repo",
         "path",
@@ -200,15 +219,8 @@ def quality_filter(
         F.round(F.col("nlp.ppl"), 6).alias("ppl"),
         "keep",
         "drop_reason",
-        F.when(F.lit(scrub_enabled) & F.col("keep"), F.col("sc.n_sub"))
-        .otherwise(F.lit(0))
-        .alias("n_redactions"),
-        F.when(F.lit(scrub_enabled) & F.col("keep"), F.col("sc.text")).alias(
-            "scrubbed_content"
-        ),
+        F.when(emit, F.col("nlp.n_sub")).otherwise(F.lit(0)).alias("n_redactions"),
+        scrubbed.alias("scrubbed_content"),
         F.sha2(F.encode(F.col("content"), "UTF-8"), 256).alias("content_sha256"),
-        F.when(
-            F.lit(scrub_enabled) & F.col("keep"),
-            F.sha2(F.encode(F.col("sc.text"), "UTF-8"), 256),
-        ).alias("scrubbed_sha256"),
+        F.sha2(F.encode(scrubbed, "UTF-8"), 256).alias("scrubbed_sha256"),
     )

@@ -55,18 +55,22 @@ PATTERNS: tuple[tuple[str, str, str], ...] = (
     ),
 )
 
-# Engine-neutral flag: Python compiles with re.ASCII so \b/\w/\s use the
-# ASCII tables — exactly java.util.regex defaults (the JVM trigger) and RE2
-# (the DuckDB oracle).  Without it, Python's Unicode-aware \b can match where
-# the JVM trigger does not, silently skipping rows from the scrub stage.
+# Python compiles with re.ASCII so \b/\w/\s use the ASCII tables, as RE2 (the
+# DuckDB oracle) does.  java.util.regex agrees on \w and \s but, before JDK 19
+# (JDK-8264160), its \b counts any Unicode letter or digit as a word character:
+# on JDK 17 ``user@example.comé`` has no \b after ``com``, so a JVM-side
+# match misses the email that Python and the labeler redact.  The pipeline
+# therefore runs its scrub (and the scrub's prefilter) in Python only.  The
+# JVM ``regexp_replace`` chains in ``operators/audit.py`` and
+# ``operators/commentscope.py`` still carry this divergence on JDK < 19.
 PATTERN_FLAGS = re.ASCII | re.MULTILINE
 
 COMPILED: tuple[tuple[str, "re.Pattern[str]", str], ...] = tuple(
     (name, re.compile(pat, PATTERN_FLAGS), repl) for name, pat, repl in PATTERNS
 )
 
-# union of all patterns — used as a JVM-side (Java regex) scrub trigger so
-# the Python scrub stage only ever sees rows that contain a candidate match.
-# Every construct used above ((?i:..), \b, [0-9] classes, lazy quantifiers)
-# parses identically in java.util.regex, Python re (ASCII mode), and RE2.
+# union of all patterns: one search decides whether a row needs the
+# per-pattern passes.  Every construct used above ((?i:..), \b, [0-9]
+# classes, lazy quantifiers) parses in java.util.regex, Python re and RE2;
+# the \b caveat above applies to a JVM-side trigger.
 TRIGGER_REGEX = "|".join(f"(?:{p})" for _n, p, _r in PATTERNS)

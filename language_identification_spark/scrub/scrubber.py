@@ -1,7 +1,8 @@
-"""Pandas-vectorized scrub pass (the Spark-side implementation).
+"""Batch scrub pass (the Spark-side implementation).
 
-Used inside the pipeline's Arrow pandas UDF; operates on whole batches with
-``pandas.Series.str`` ops — no per-row Python at the Spark level.  A ``mask``
+Used inside the pipeline's Arrow pandas UDF on whole ``pandas.Series``
+batches — no per-row Python at the Spark level; per row, each pattern is
+one compiled ``re`` ``subn`` call (C speed).  A ``mask``
 lets the caller skip rows already marked for drop (single-pass plan: the
 scrub cost is only paid for kept rows, without re-scanning the source —
 SURVEY.md §4.1 "early filter before downstream work").
@@ -14,14 +15,20 @@ import re
 import numpy as np
 import pandas as pd
 
-from .patterns import COMPILED, PATTERN_FLAGS, PATTERNS
+from .patterns import COMPILED, PATTERN_FLAGS, TRIGGER_REGEX
 
 # one cheap combined pass decides which rows need the 6 expensive
-# count+replace passes; in realistic corpora only a few % do.  The union of
+# substitution passes; in realistic corpora only a few % do.  The union of
 # the real patterns is exact, so the prefilter can never change results.
-_PREFILTER = re.compile(
-    "|".join(f"(?:{p})" for _n, p, _r in PATTERNS), PATTERN_FLAGS
-)
+_PREFILTER = re.compile(TRIGGER_REGEX, PATTERN_FLAGS)
+
+
+def _scrub_one(text: str) -> tuple[str, int]:
+    n = 0
+    for _name, rx, repl in COMPILED:
+        text, k = rx.subn(repl, text)
+        n += k
+    return text, n
 
 
 def scrub_series(
@@ -33,9 +40,11 @@ def scrub_series(
 
     Rows where ``mask`` is False are passed through untouched with n_sub=0.
     ``pretriggered=True`` means every masked row is already known to contain
-    a candidate match (the pipeline's JVM ``rlike`` trigger is the exact same
-    union), so the Python prefilter pass is skipped — it would be pure
-    redundant regex work on the hot path.
+    a candidate match (e.g. selected by a JVM ``rlike`` on ``TRIGGER_REGEX``),
+    so the Python prefilter pass is skipped.  Each pattern makes one
+    ``subn`` pass per row: its substitution count is taken on the text the
+    earlier patterns left, so a match consumed by an earlier pattern (an
+    email inside a PEM block) is not counted again.
     """
     if mask is None:
         mask = pd.Series(True, index=content.index)
@@ -52,11 +61,7 @@ def scrub_series(
         )
         active = active[hit]
     if len(active):
-        scrubbed = active
-        counts = np.zeros(len(active), dtype=np.int64)
-        for _name, rx, repl in COMPILED:
-            counts += scrubbed.str.count(rx).to_numpy(dtype=np.int64)
-            scrubbed = scrubbed.str.replace(rx, repl, regex=True)
-        out.loc[scrubbed.index] = scrubbed
-        n_sub.loc[scrubbed.index] = counts
+        texts, counts = zip(*map(_scrub_one, active))
+        out.loc[active.index] = list(texts)
+        n_sub.loc[active.index] = np.fromiter(counts, dtype=np.int64)
     return out, n_sub

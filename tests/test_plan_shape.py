@@ -1,14 +1,17 @@
 """Physical-plan pins: the scale properties SURVEY §4 promises must hold in
 the actual Catalyst plan — predicate pushdown to the parquet scan, column
-pruning, exactly two Arrow UDF stages, zero shuffles in quality_filter."""
+pruning, exactly one Arrow UDF stage, zero shuffles in quality_filter."""
 
 from __future__ import annotations
 
+import re
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from language_identification_spark.datagen.corpus import generate_source_files
-from language_identification_spark.plans.pipeline import quality_filter
+from language_identification_spark.plans.pipeline import _filter_batch, quality_filter
 
 
 @pytest.fixture(scope="module")
@@ -42,11 +45,14 @@ def test_filter_pushdown_and_column_pruning(spark, parquet_src):
     assert "content" in read_schema
 
 
-def test_two_arrow_stages_zero_shuffles(spark, parquet_src):
+def test_one_arrow_stage_zero_shuffles(spark, parquet_src):
+    # models and scrub share one Python crossing, and the PII trigger runs
+    # only in Python: no JVM rlike of the scrub patterns in the plan
     out = quality_filter(spark.read.parquet(parquet_src))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 2
-    assert "Exchange" not in plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "Exchange" not in plan, plan
+    assert "AKIA" not in plan, plan
 
 
 def test_jaccard_pairs_single_udf_evaluation(spark, parquet_src):
@@ -71,11 +77,30 @@ def test_jaccard_pairs_single_udf_evaluation(spark, parquet_src):
 
 
 def test_analyze_input_clipped_jvm_side(spark, parquet_src):
-    # a 5 MB minified row must not cross the JVM→Python boundary whole:
-    # the plan substrings content to SAMPLE_BYTES before the first UDF
+    # a 5 MB minified row must not cross the JVM→Python boundary: rows the
+    # cheap rules drop ship as "" to the one UDF
     out = quality_filter(spark.read.parquet(parquet_src))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "substring" in plan and "4096" in plan
+    udf_input = re.compile(
+        r"_filter_batch\(CASE WHEN isnull\(cheap_reason#\d+\) "
+        r"THEN content#\d+ ELSE  END, isnull\(cheap_reason#\d+\), true\)"
+    )
+    assert udf_input.search(plan), plan
+
+
+def test_filter_batch_models_read_only_the_sample():
+    # kept-class rows cross whole; the models must still score exactly the
+    # first 4096 chars, what F.substring(content, 1, 4096) would give them
+    src, truth = generate_source_files(40, seed=42)
+    clean = src.loc[(truth["true_class"] == "clean").to_numpy(), "content"].iloc[0]
+    big = "\n".join([clean] * (5_000_000 // len(clean) + 1))
+    assert len(big) >= 5_000_000
+    cols = ["detected_lang", "confidence", "mean_ll", "ppl"]
+    on = pd.Series([True])
+    whole = _filter_batch(pd.Series([big]), on, on)
+    head = _filter_batch(pd.Series([big[:4096]]), on, on)
+    pd.testing.assert_frame_equal(whole[cols], head[cols])
+    assert whole["n_sub"].iloc[0] == 0 and whole["scrubbed"].isna().all()
 
 
 def test_multimodal_feature_stage_single_python_node_no_shuffle(spark):
